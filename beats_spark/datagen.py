@@ -20,7 +20,7 @@ and the DuckDB oracle compute byte-identical tables:
 
 Skew is deliberate (FIXTURES.md: one hot source): keys 0-3 of the
 mod-10 space collapse into `src-0`, giving it 40% of rows — this is
-what the salted repartition path (skew.py) must digest.
+what map-side partial aggregation (and skew.py's salted join) must digest.
 
 Corruption: every o_orderkey % 101 == 0 row gets a non-dissectable
 payload → exercises the `dissect_parsing_error` flag + dead-letter

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from beats_spark.datagen import load_token_events, lookup_rows, lookup_sql, token_events_sql
 from beats_spark.pipeline import Pipeline
-from beats_spark.skew import salted_count
 
 FLAGSHIP_TOKENIZER = (
     'level=%{level} ts=%{ts} caller=%{caller} msg="%{msg}" ip=%{ip} seq=%{seq|long}'
@@ -83,10 +82,15 @@ def routed_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(source, sink) counts via the two-phase salted aggregation
-    (skew.py) — the events.acked-per-sink analog."""
+    """Per-(source, sink) counts — the events.acked-per-sink analog. A
+    plain groupBy: partial aggregation combines the hot `source` on the
+    map side, so no salting is needed (skew.py)."""
     routed = routed_frame(spark, sf_dir)
-    return salted_count(routed, ["source", "sink"]).orderBy("source", "sink")
+    return (
+        routed.groupBy("source", "sink")
+        .agg(F.count(F.lit(1)).alias("events"))
+        .orderBy("source", "sink")
+    )
 
 
 # --- DuckDB oracle twins -----------------------------------------------------

@@ -530,10 +530,10 @@ def pipeline_aggs(
     for m in metric_cols:
         scaled = F.lit(int(scale)) * F.sum(m).over(w_mov)
         mcnt = F.count(F.lit(1)).over(w_mov)
-        # exact integer floor division of two BIGINTs (both
-        # non-negative): subtract the pmod first so the / is an exact
-        # integer — never a rounded double (CLAUDE.md oracle rule)
-        mavg = ((scaled - F.pmod(scaled, mcnt)) / mcnt).cast("long")
+        # BIGINT `div`, as the geo centroid: it truncates, which is the
+        # floor for these non-negative sums; `/` would go through a
+        # double and round once the scaled sum passes 2^53
+        mavg = F.call_function("div", scaled, mcnt)
         out = (
             out.withColumn(f"cum_{m}", F.sum(m).over(w_cum).cast("long"))
             .withColumn(

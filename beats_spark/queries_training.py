@@ -1218,84 +1218,6 @@ SELECT rank, token, CAST(n AS BIGINT) AS n,
 FROM r, tot WHERE rank <= 20 ORDER BY rank"""
 
 
-def catalog():
-    return {
-        "q11_dedup_exact": q_dedup_exact,
-        "q12_text_stats": q_text_stats,
-        "q13_cosine_topk": q_cosine_topk,
-        "q14_jaccard_pairs": q_jaccard_pairs,
-        "q15_multiline": q_multiline,
-        "q60_winnow": q_winnow,
-        "q61_stratified_sample": q_stratified_sample,
-        "q64_weighted_sample": q_weighted_sample,
-        "q24_token_window_dups": q_token_window_dups,
-        "q25_quality": q_quality,
-        "q30_dup_clusters": q_dup_clusters,
-        "q31_decontaminate": q_decontaminate,
-        "q32_split": q_split,
-        "q33_pack": q_pack,
-        "q34_repetition": q_repetition,
-        "q35_source_mix": q_source_mix,
-        "q36_top_ngrams": q_top_ngrams,
-        "q37_scrub": q_scrub,
-        "q38_quality_funnel": q_quality_funnel,
-        "q39_vocab": q_vocab,
-        "q74_pagerank": q_pagerank,
-        "q80_triangles": q_triangles,
-        "q81_bloom_decontaminate": q_bloom_decontaminate,
-        "q83_substring_spans": q_substring_spans,
-        "q84_dsir_select": q_dsir_select,
-        "q86_perplexity_filter": q_perplexity_filter,
-        "q87_bpe_encode": q_bpe_encode,
-        "q89_kcore": q_kcore,
-        "q90_normalize": q_normalize,
-        "q91_lpa_communities": q_lpa,
-        "q93_rrf_fusion": q_rrf,
-        "q94_significant_terms": q_significant_terms,
-        "q96_neighborhood": q_neighborhood,
-        "q97_line_dedup": q_line_dedup,
-    }
-
-
-def oracles():
-    return {
-        "q11_dedup_exact": q_dedup_exact_oracle(),
-        "q12_text_stats": q_text_stats_oracle(),
-        "q13_cosine_topk": q_cosine_topk_oracle(),
-        "q14_jaccard_pairs": q_jaccard_pairs_oracle(),
-        "q15_multiline": q_multiline_oracle(),
-        "q60_winnow": q_winnow_oracle(),
-        "q74_pagerank": q_pagerank_oracle(),
-        "q80_triangles": q_triangles_oracle(),
-        "q81_bloom_decontaminate": q_bloom_decontaminate_oracle(),
-        "q83_substring_spans": q_substring_spans_oracle(),
-        "q84_dsir_select": q_dsir_select_oracle(),
-        "q86_perplexity_filter": q_perplexity_filter_oracle(),
-        "q87_bpe_encode": q_bpe_encode_oracle(),
-        "q89_kcore": q_kcore_oracle(),
-        "q90_normalize": q_normalize_oracle(),
-        "q91_lpa_communities": q_lpa_oracle(),
-        "q93_rrf_fusion": q_rrf_oracle(),
-        "q94_significant_terms": q_significant_terms_oracle(),
-        "q96_neighborhood": q_neighborhood_oracle(),
-        "q97_line_dedup": q_line_dedup_oracle(),
-        "q61_stratified_sample": q_stratified_sample_oracle(),
-        "q64_weighted_sample": q_weighted_sample_oracle(),
-        "q24_token_window_dups": q_token_window_dups_oracle(),
-        "q25_quality": q_quality_oracle(),
-        "q30_dup_clusters": q_dup_clusters_oracle(),
-        "q31_decontaminate": q_decontaminate_oracle(),
-        "q32_split": q_split_oracle(),
-        "q33_pack": q_pack_oracle(),
-        "q34_repetition": q_repetition_oracle(),
-        "q35_source_mix": q_source_mix_oracle(),
-        "q36_top_ngrams": q_top_ngrams_oracle(),
-        "q37_scrub": q_scrub_oracle(),
-        "q38_quality_funnel": q_quality_funnel_oracle(),
-        "q39_vocab": q_vocab_oracle(),
-    }
-
-
 # --- q74: link-graph authority rank (exact integer PageRank) -----------------
 
 
@@ -1997,9 +1919,11 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     ws = text.words(F.col("text"))
-    seq = F.sequence(
-        F.lit(0), F.floor((F.size(ws) - 1) / 4).cast("int")
-    )
+    # an empty document is one empty line, as in the twin (DuckDB splits
+    # '' into ['']); unguarded, sequence(0, -1) would give two
+    seq = F.when(
+        F.size(ws) > 0, F.sequence(F.lit(0), F.floor((F.size(ws) - 1) / 4).cast("int"))
+    ).otherwise(F.array(F.lit(0)))
     lines_arr = F.transform(
         seq, lambda i: F.array_join(F.slice(ws, i * 4 + 1, 4), " ")
     )

@@ -1,56 +1,25 @@
-"""Explicit skew mitigation on the `source` column (BASELINE north_rule).
+"""Skew mitigation on the hot `source` column (BASELINE north_rule).
 
 The synthetic table gives one source ~40% of all rows (FIXTURES.md §1).
-Anything that shuffles on `source` (per-source aggregation, source-
-partitioned sinks) would put 40% of the data in one task. Two tools:
+Salting — spreading a hot key over `buckets` sub-keys by a hash of
+another column — only pays where an operator cannot combine the key
+locally. Aggregations can: partial aggregation collapses the hot key
+map-side, so the shuffle carries one partial row per (key, task) and a
+plain `groupBy` needs no help (the flagship `route_counts` is one; it
+was measured slower salted than plain, with identical rows). A join
+cannot: every fact row of the hot key must meet its dim row, so
+`salted_join` fans that key out over `buckets` reducers.
 
-1. `salted(df, col, buckets)` — adds `__salt__ = pmod(xxhash64(doc_id),
-   buckets)`; aggregate in two phases: groupBy(source, __salt__) partial
-   → groupBy(source) final. Classic two-stage skew-proof aggregation;
-   the first stage is map-side-combinable so the hot key fans out over
-   `buckets` reducers.
-2. `repartition_salted(df, n, col)` — co-locates data for a write by
-   (source, salt) instead of raw source, bounding any one task's share
-   of the hot key to 1/buckets.
-
-AQE's skewJoin handles *joins* at runtime; these handle aggregations
-and writes, which AQE does not rebalance (pre-Spark-4 rebalancing only
-applies to AQE shuffle reads, not partitionBy file writes).
+AQE's skewJoin splits skewed join partitions at runtime; `salted_join`
+is for the plans it cannot rewrite (see its docstring).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt__"
-
-
-def salted(df: DataFrame, salt_src: str = "doc_id", buckets: int = 32) -> DataFrame:
-    return df.withColumn(SALT_COL, F.pmod(F.xxhash64(F.col(salt_src)), F.lit(buckets)))
-
-
-def salted_count(
-    df: DataFrame, keys: list[str], salt_src: str = "doc_id", buckets: int = 32
-) -> DataFrame:
-    """Two-phase skew-proof count: partial per (keys, salt) then final
-    per keys. The partial stage gets map-side combine; the hot key is
-    spread over `buckets` partitions."""
-    partial = (
-        salted(df, salt_src, buckets)
-        .groupBy(*keys, SALT_COL)
-        .agg(F.count(F.lit(1)).alias("__c__"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("__c__").alias("events"))
-
-
-def repartition_salted(
-    df: DataFrame, num_partitions: int, key: str, salt_src: str = "doc_id", buckets: int = 32
-) -> DataFrame:
-    out = salted(df, salt_src, buckets).repartition(
-        num_partitions, F.col(key), F.col(SALT_COL)
-    )
-    return out.drop(SALT_COL)
 
 
 def salted_join(
@@ -82,7 +51,7 @@ def salted_join(
             f"salted_join: an input already carries {SALT_COL!r} — "
             "drop or rename it first (it would be silently clobbered)"
         )
-    f = salted(fact, salt_src, buckets)
+    f = fact.withColumn(SALT_COL, F.pmod(F.xxhash64(F.col(salt_src)), F.lit(buckets)))
     d = dim.withColumn(
         SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)).cast("array<long>"))
     )

@@ -517,9 +517,10 @@ def neighborhood_function(
     round is one equi-join of the sketch table into the once-persisted
     dst-partitioned edge layout plus one map-side-combined
     hll_union_agg groupBy — shuffle ∝ nodes·sketch_size regardless of
-    ball volume. Driver loop over a constant round count; per-round
-    totals come off the round's persisted sketch table (dimension-
-    sized aggregates, never collected per node).
+    ball volume. A Python loop runs the constant round count; each round's
+    total (one scalar, never a per-node collect) is read off its
+    persisted sketch table, then the previous round's table is
+    released, so at most two sketch tables are cached at a time.
 
     EXACTNESS WINDOW (the q63 oracle recipe): DataSketches HLL stays
     in exact coupon mode below ~3/4·2^(lg_k-2) distincts (~3072 at
@@ -542,21 +543,24 @@ def neighborhood_function(
         F.hll_sketch_agg("__node", F.lit(lg_k)).alias("__sk")
     ).persist()
 
-    def total(t: int, sk_df: DataFrame) -> DataFrame:
-        return sk_df.agg(
-            F.sum(F.hll_sketch_estimate("__sk")).cast("long").alias("nf")
-        ).select(F.lit(t).cast("int").alias("t"), "nf")
+    def total(sk_df: DataFrame) -> int | None:
+        # reads every partition, so the round's sketch table is fully
+        # cached once this returns and the previous one can go
+        return sk_df.agg(F.sum(F.hll_sketch_estimate("__sk")).cast("long")).first()[0]
 
-    out = total(0, sk)
+    totals = [(0, total(sk))]
     for t in range(1, rounds + 1):
         nbr = e.join(sk, e.__dst == sk.__node).select(
             F.col("__src").alias("__node"), "__sk"
         )
-        sk = (
+        prev, sk = sk, (
             nbr.unionByName(sk.select("__node", "__sk"))
             .groupBy("__node")
             .agg(F.hll_union_agg("__sk").alias("__sk"))
             .persist()
         )
-        out = out.unionByName(total(t, sk))
-    return out
+        totals.append((t, total(sk)))
+        prev.unpersist()
+    sk.unpersist()
+    e.unpersist()
+    return edges.sparkSession.createDataFrame(totals, "t INT, nf BIGINT")

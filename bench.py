@@ -61,16 +61,6 @@ def _drain_disk() -> None:
         pass
 
 
-def _load_steady() -> dict[str, float]:
-    steady_path = os.path.join(os.path.dirname(__file__), "BENCH_STEADY.json")
-    if not os.path.exists(steady_path):
-        return {}
-    with open(steady_path) as fh:
-        return {
-            k: v for k, v in json.load(fh).items() if isinstance(v, (int, float))
-        }
-
-
 def _mk_spark(cpus: str, shuffle: int):
     from beats_spark.session import get_spark
 
@@ -163,49 +153,11 @@ def run_queries(spark, sf_dir: str, warmup_sf_dir: str | None = None) -> dict[st
         spark.catalog.clearCache()
         return elapsed
 
-    cat = catalog()
     times: dict[str, float] = {}
-    small: dict[str, float] = {}
-    for name, fn in cat.items():
+    for name, fn in catalog().items():
         if warmup_sf_dir:
-            # warm JIT/codegen at small scale; its time doubles as a
-            # per-query noise floor for the outlier rescue below
-            small[name] = timed(fn, warmup_sf_dir)
+            timed(fn, warmup_sf_dir)
         times[name] = round(min(timed(fn, sf_dir) for _ in range(runs)), 3)
-
-    # Outlier rescue (BENCH_r02 lesson): VM noise bursts are one-sided
-    # and last long enough to contaminate EVERY back-to-back sample of
-    # adjacent queries (r02 recorded q21/q22/q23 at 3-10× steady state
-    # despite best-of-2; a round-3 calibration run caught q20 at 3.6×
-    # steady across all three samples). Primary limit: 2× the
-    # checked-in per-query steady state (BENCH_STEADY.json — measured
-    # spikes land at 3-10×, legit drift within ~1.6×). Fallback for
-    # queries without a steady entry: 4× the sf0.001 warmup time
-    # (measured legit big/small ratios top out at ~5 only where small
-    # itself is large). Flagged queries re-sample at the END of the
-    # pass — minutes later, after the burst — keeping the min.
-    steady = _load_steady()
-    rescue_ratio = float(os.environ.get("BENCH_RESCUE_RATIO", "4"))
-    rescue_floor = float(os.environ.get("BENCH_RESCUE_FLOOR", "3.0"))
-    if os.environ.get("BENCH_DEBUG_RATIOS"):
-        for name in cat:
-            if small.get(name):
-                print(
-                    f"[ratio] {name}: small={small[name]:.3f}s "
-                    f"big={times[name]:.3f}s ratio={times[name]/small[name]:.1f}",
-                    file=sys.stderr,
-                )
-    for name, fn in cat.items():
-        if name in steady:
-            limit = max(rescue_floor, 2.0 * steady[name])
-        elif small.get(name):
-            limit = max(rescue_floor, rescue_ratio * small[name])
-        else:
-            continue
-        attempts = 0
-        while times[name] > limit and attempts < 2:
-            times[name] = round(min(times[name], timed(fn, sf_dir)), 3)
-            attempts += 1
     return times
 
 
@@ -299,20 +251,11 @@ def main() -> None:
     pipe_runs = [run_pipeline_bench(spark, bench_rows) for _ in range(2)]
     pipe = max(pipe_runs, key=lambda r: r["sequences_per_sec"])
     total = round(time.perf_counter() - t_all0, 3)
-    # self-adjudicating record (VERDICT r03 item 6): carry the per-query
-    # steady-state minimums and flag any best-of-N that still exceeds
-    # 1.5× steady as noise, so a reader never mistakes VM-noise
-    # inflation for an engine regression
-    steady = _load_steady()
-    noise_suspect = sorted(
-        n for n, t in qtimes.items()
-        if n in steady and steady[n] > 0 and t > 1.5 * steady[n]
-    )
     # BENCH_r04 lesson (verdict-r04 wrong #1): the driver captures only
     # the LAST 2000 chars of stdout and parses the JSON line found
     # there.  The r4 line (64 full query names + inline steady table)
     # outgrew the window → `parsed: null`.  So: the rich record (full
-    # catalog names, steady minimums, per-run pipeline samples) goes to
+    # catalog names, per-run pipeline samples) goes to
     # BENCH_FULL.json + stderr, and the FINAL stdout line is a compact
     # record — qNN keys, 2-decimal times, no spaces — that fits the
     # window with headroom (~1 kB at 70 queries).
@@ -324,8 +267,6 @@ def main() -> None:
         "sf": sf_dir,
         "pipeline": pipe,
         "pipeline_runs": [r["sequences_per_sec"] for r in pipe_runs],
-        "steady_state_min": {n: steady[n] for n in qtimes if n in steady},
-        "noise_suspect": noise_suspect,
         "disk_state": disk,
     }
     full_path = os.path.join(os.path.dirname(__file__), "BENCH_FULL.json")
@@ -343,9 +284,6 @@ def main() -> None:
             "elapsed_sec": pipe["elapsed_sec"],
             "sequences_per_sec": pipe["sequences_per_sec"],
         },
-        "noise_suspect": [n.split("_", 1)[0] for n in noise_suspect],
-        "disk_state": disk["state"],
-        "note": "qNN keys; full names+steady in BENCH_FULL.json",
     }
     print(json.dumps(compact, separators=(",", ":")))
 

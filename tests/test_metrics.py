@@ -445,6 +445,25 @@ def test_date_histogram_gap_fill_and_pipeline_aggs(spark):
         assert out[base + i]["mavg_n_scaled"] == (10**6 * sum(w)) // len(w)
 
 
+def test_pipeline_aggs_moving_avg_exact_past_2_53(spark):
+    from beats_spark.metrics import pipeline_aggs
+
+    # the third window's scaled sum is ~3e16; a double quotient rounds
+    # it up by one, BIGINT div keeps floor(1e6*sum/cnt) exact
+    vals = [9_007_199_255, 9_007_199_257, 12_345_678_901]
+    b = spark.createDataFrame(list(enumerate(vals)), "bucket_idx LONG, n LONG")
+    got = [
+        r["mavg_n_scaled"]
+        for r in pipeline_aggs(b, "bucket_idx", ["n"], window=3).orderBy("bucket_idx").collect()
+    ]
+    want = []
+    for i in range(3):
+        w = vals[max(0, i - 2): i + 1]
+        want.append((10**6 * sum(w)) // len(w))
+    assert 10**6 * sum(vals) > 2**53
+    assert got == want
+
+
 def test_date_histogram_min_doc_count_filters(spark):
     from beats_spark.metrics import date_histogram
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entry_mod
+from beats_spark.queries import QUERIES as TABLE
 from tests.harness import compare
 
 import os
@@ -20,6 +21,13 @@ def test_catalog_consistency():
     # every oracle key must have a query; queries without oracle are the
     # documented weaker rows-only checks
     assert set(ORACLES) <= set(QUERIES)
+
+
+def test_query_table_names_unique():
+    # catalog() is a dict over the table: a repeated row would silently
+    # replace the earlier one and drop a query from its checked position
+    names = [name for name, _, _ in TABLE]
+    assert len(names) == len(set(names)), sorted({n for n in names if names.count(n) > 1})
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

@@ -4,6 +4,7 @@ testdata (the non-SQL-expressible ops get their exactness check here)."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -1141,3 +1142,41 @@ def test_line_frequency_dedup_hand_corpus(spark):
     # max_freq=2 keeps pairs, still drops the 3x footer
     out2 = {r["doc_id"]: r for r in line_frequency_dedup(df, max_freq=2).collect()}
     assert out2[3]["n_kept"] == 0 and out2[4]["n_dropped"] == 0
+
+
+@pytest.mark.parametrize("sep", [".", "|"])
+def test_line_frequency_dedup_literal_separator(spark, sep):
+    """`sep` is a literal on both the split and the rejoin, even when it
+    is a regex metacharacter."""
+    from beats_spark.training.dedup import line_frequency_dedup
+
+    docs = [(1, sep.join(["alpha", "beta", "gamma"])), (2, sep.join(["beta", "delta"]))]
+    df = spark.createDataFrame(docs, "doc_id INT, text STRING")
+    out = {r["doc_id"]: r for r in line_frequency_dedup(df, sep=sep).collect()}
+    assert (out[1]["n_kept"], out[1]["n_dropped"]) == (2, 1)
+    assert out[1]["text_clean"] == sep.join(["alpha", "gamma"])
+    assert (out[2]["n_kept"], out[2]["n_dropped"]) == (1, 1)
+    assert out[2]["text_clean"] == "delta"
+
+
+def test_q97_empty_documents_match_twin(spark, tmp_path):
+    """Empty and whitespace-only documents of both footer parities:
+    q97 must build the same lines as its DuckDB twin (an empty
+    document is one empty line there, never the phantom pair an
+    unguarded sequence(0, -1) makes)."""
+    import duckdb
+
+    from beats_spark.queries_training import q_line_dedup, q_line_dedup_oracle
+    from tests.harness import TABLES, compare
+
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
+    duckdb.connect().execute(
+        f"""COPY (SELECT * FROM '{SF}/documents.parquet'
+                  UNION ALL SELECT * FROM (VALUES
+                    (100000, '', 'en', 'src0', 0), (100001, '', 'en', 'src0', 0),
+                    (100002, '  ', 'en', 'src0', 2), (100003, ' ', 'en', 'src0', 1)))
+            TO '{tmp_path}/documents.parquet' (FORMAT parquet)"""
+    )
+    compare(spark, str(tmp_path), "q97_line_dedup", q_line_dedup, q_line_dedup_oracle())
